@@ -10,12 +10,7 @@ from e2e_etl_pipeline_spark.functions.text import (  # noqa: F401
     clean_text,
     normalize_number_str,
 )
-from e2e_etl_pipeline_spark.functions.salary import (  # noqa: F401
-    parse_salary,
-    extract_currency,
-    extract_numbers,
-    extract_pay_period,
-)
+from e2e_etl_pipeline_spark.functions.salary import parse_salary  # noqa: F401
 from e2e_etl_pipeline_spark.functions.vectors import (  # noqa: F401
     cosine_similarity,
     dot,

@@ -1,4 +1,4 @@
-"""Live-browser fetchers: the reference's two acquisition loop contracts
+"""Live-browser fetcher: the reference's two acquisition loop contracts
 behind the driver-side ``Fetcher`` protocol (acquire.py).
 
 The reference drives Chrome over two job boards:
@@ -13,23 +13,19 @@ The reference drives Chrome over two job boards:
   neither the row count nor the max index advanced (progress test
   :234-237), bounded by ``max_rounds`` (:113-114).
 
-Selenium and Chrome are NOT present in this container, so the loops are
-written against the minimal :class:`BrowserPort` below — an offline fake
-exercises every branch in ``tests/test_acquire_selenium.py``, and
-:func:`selenium_port` adapts a real ``selenium.webdriver`` behind an
-import-try when the package exists. Acquisition stays driver-side by
-design (SURVEY.md §3.2): the WebDriver process boundary must never sit
-inside a cluster-side operator.
+Both loops return ordered ``(idx, html)`` fragments; a caller that wants
+fragments calls them directly. :func:`make_browser_fetcher` merges them
+into ONE document per leaf (``<ul>…</ul>`` scroll site, ``<div>…</div>``
+paged site): the reference's single-file raw artifact
+(``JustJoinITScraper.scrape(...) -> str``) and the shape
+``acquire.synthetic_fetcher`` emits, so offline and live fetches share one
+contract.
 
-Relationship to sources/selenium_fetcher.py (deliberate, not drift): that
-module is the REFERENCE-FAITHFUL artifact shape — each loop emits ONE
-merged HTML document (the A28 single-file raw artifact the transform
-stage reads whole), with the reference's exact stale-round accounting.
-THIS module is the engine-native shape — one row PER offer fragment with
-running doc_ids, feeding acquire.fetched_documents row-wise so fragments
-parallelize downstream without a re-explode. Pick by output contract;
-behavior changes to either loop must be checked against the shared
-reference citations above.
+Selenium is optional, so the loops run against the minimal
+:class:`BrowserPort` (offline fakes in ``tests/test_acquire_selenium.py``);
+``make_browser_fetcher(selenium_port)`` is the live fetcher. Acquisition
+stays driver-side (SURVEY.md §3.2): the WebDriver process boundary must
+never sit inside a cluster-side operator.
 """
 
 from __future__ import annotations
@@ -39,28 +35,25 @@ from typing import Protocol
 
 from e2e_etl_pipeline_spark.sources.acquire import Fetcher
 
-# Site-specific listing-URL templates, the engine's version of the
-# reference's _build_url (extract_data.py:47-51 and :164-166). Options are
-# data, not code: new sites register a template + loop style.
+# Site-specific listing-URL templates: the reference's _build_url
+# (extract_data.py:47-51 and :74-79, :163-167), salaried offers only.
+# Options are data, not code: new sites register a template + loop style.
 URL_TEMPLATES = {
-    "jjit": "https://it.example-jjit.invalid/{region}/all/experience-level_{experience}",
-    # "ppl" is the reference's site abbreviation (config.py:13
-    # SITE_ABBREVIATIONS) and the key pipeline/offers.py registers its
-    # parser under — a divergent key here would make parse_offers silently
-    # drop every row this fetcher produces.
-    "ppl": "https://it.example-pracuj.invalid/praca/{region};wp?et={experience}",
+    "jjit": (
+        "https://justjoin.it/job-offers/{region}"
+        "?experience-level={experience}&with-salary=yes"
+    ),
+    # "ppl" is the reference's abbreviation (config.py:13) and the key
+    # pipeline/offers.py parses under; any other key drops every row.
+    "ppl": "https://it.pracuj.pl/praca/{region};wp?et={experience}&sal=1",
 }
 LOOP_STYLE = {"jjit": "scroll", "ppl": "paginate"}
 
 
 class BrowserPort(Protocol):
-    """The five interactions the two loop contracts actually need.
-
-    A deliberate seam: the imperative WebDriver surface (waits, clicks,
-    execute_script — extract_data.py:100-106,182-197) collapses to this,
-    so the loops are testable without a browser and the Selenium adapter
-    stays a thin leaf.
-    """
+    """The five interactions the two loop contracts need: the WebDriver
+    surface (waits, clicks, execute_script — extract_data.py:100-106,
+    182-197) collapsed so the loops are testable without a browser."""
 
     def open(self, url: str) -> None:
         """Navigate to the listing page."""
@@ -72,7 +65,7 @@ class BrowserPort(Protocol):
         """Click the next-page control; False if absent/disabled."""
 
     def scroll(self) -> None:
-        """Advance the virtualized list by one viewport."""
+        """Advance the virtualized list by one scroll step."""
 
     def close(self) -> None:
         """Tear the browser down (context-manager duty in the reference,
@@ -114,22 +107,22 @@ def scroll_fetch(
     (:245), matching the engine's ``orderBy(idx.cast long)`` semantics.
     """
     seen: dict[int, str] = {}
-    port.open(url)
-    # Initial harvest, then baseline the watermark AFTER it
-    # (extract_data.py:218-223; selenium_fetcher.scroll_harvest parity):
-    # loop round 1 counts as progress only if its own harvest adds items
-    # beyond the initial collect. A (0, -1) baseline would grant one free
-    # round whenever the page loads non-empty, changing the harvested
-    # artifact under a tight stale budget — the reference-divergence the
-    # round-4 advisor flagged in the sibling module.
-    for idx, html in port.harvest():
-        seen.setdefault(idx, html)
-    stale = 0
-    watermark = (len(seen), max(seen, default=-1))
-    for _round in range(max_rounds):
+
+    def harvest() -> tuple[int, int]:
         for idx, html in port.harvest():
             seen.setdefault(idx, html)
-        progress = (len(seen), max(seen, default=-1))
+        return len(seen), max(seen, default=-1)
+
+    port.open(url)
+    # Initial harvest, then baseline the watermark AFTER it
+    # (extract_data.py:218-223): loop round 1 counts as progress only if
+    # its own harvest adds items beyond the initial collect. A (0, -1)
+    # baseline would grant one free round whenever the page loads
+    # non-empty, changing the harvested artifact under a tight stale budget.
+    watermark = harvest()
+    stale = 0
+    for _round in range(max_rounds):
+        progress = harvest()
         if progress == watermark:
             stale += 1
             if stale >= max_stale_rounds:
@@ -144,10 +137,11 @@ def scroll_fetch(
 def make_browser_fetcher(port_factory) -> Fetcher:
     """Adapt a BrowserPort factory to the acquire.Fetcher signature.
 
-    ``port_factory(site) -> BrowserPort``; the loop style and URL come
-    from the per-site registries above. The port is always closed, even
-    on a failing fetch (the reference's context-manager teardown,
-    extract_data.py:285-292).
+    ``port_factory(site) -> BrowserPort``; loop style and URL come from
+    the per-site registries above. A fetch returns one merged document,
+    ``[(0, "<ul>…</ul>")]`` (scroll) or ``[(0, "<div>…</div>")]`` (paged),
+    fragments in loop order. The port is always closed, even on a failing
+    fetch (the reference's context-manager teardown, :285-292).
     """
 
     def fetch(site: str, region: str, experience: str) -> list[tuple[int, str]]:
@@ -155,10 +149,12 @@ def make_browser_fetcher(port_factory) -> Fetcher:
         port = port_factory(site)
         try:
             if LOOP_STYLE[site] == "scroll":
-                return scroll_fetch(port, url)
-            return paginated_fetch(port, url)
+                tag, rows = "ul", scroll_fetch(port, url)
+            else:
+                tag, rows = "div", paginated_fetch(port, url)
         finally:
             port.close()
+        return [(0, f"<{tag}>" + "".join(html for _, html in rows) + f"</{tag}>")]
 
     return fetch
 
@@ -166,10 +162,10 @@ def make_browser_fetcher(port_factory) -> Fetcher:
 def selenium_port(site: str) -> BrowserPort:  # pragma: no cover - optional dep
     """Real-browser adapter, available only where selenium + Chrome exist.
 
-    Kept to the thinnest possible leaf: selector constants mirror the
-    reference's DOM contracts (li[data-index] harvest :182-197; offers
-    under [data-test='section-offers'] :82-85; next-button click
-    :100-106).
+    Selectors mirror the reference's DOM contracts (jjit rows keyed on
+    data-index :181-197; ppl offers keyed on page position :82-85; next
+    button scrolled into view, then clicked :100-106). A harvest is one
+    execute_script round-trip, not one WebDriver call per element.
     """
     try:
         from selenium import webdriver
@@ -180,28 +176,30 @@ def selenium_port(site: str) -> BrowserPort:  # pragma: no cover - optional dep
             "make_browser_fetcher with an offline BrowserPort instead"
         ) from exc
 
+    selector = {
+        "jjit": "#up-offers-list ul li[data-index]",
+        "ppl": "[data-test='section-offers'] div[data-test='default-offer']",
+    }[site]
+    harvest_js = (
+        "return Array.from(document.querySelectorAll(arguments[0]))"
+        ".map((e, i) => [e.getAttribute('data-index') ?? i, e.outerHTML]);"
+    )
+
     class _SeleniumPort:
+        # The reference's per-round scroll step (extract_data.py:199-246).
+        SCROLL_PX = 1200
+
         def __init__(self) -> None:
             options = webdriver.ChromeOptions()
             options.add_argument("--headless=new")
             self._driver = webdriver.Chrome(options=options)
-            self._site = site
 
         def open(self, url: str) -> None:
             self._driver.get(url)
 
         def harvest(self) -> list[tuple[int, str]]:
-            if self._site == "jjit":
-                rows = self._driver.find_elements(By.CSS_SELECTOR, "li[data-index]")
-                return [
-                    (int(r.get_attribute("data-index")), r.get_attribute("outerHTML"))
-                    for r in rows
-                ]
-            rows = self._driver.find_elements(
-                By.CSS_SELECTOR,
-                "[data-test='section-offers'] div[data-test='default-offer']",
-            )
-            return [(i, r.get_attribute("outerHTML")) for i, r in enumerate(rows)]
+            rows = self._driver.execute_script(harvest_js, selector)
+            return [(int(i), html) for i, html in rows]
 
         def next_page(self) -> bool:
             buttons = self._driver.find_elements(
@@ -212,13 +210,14 @@ def selenium_port(site: str) -> BrowserPort:  # pragma: no cover - optional dep
             # disabled-but-visible button would still be clicked there.
             if not buttons or not buttons[0].is_displayed():
                 return False
+            self._driver.execute_script(
+                "arguments[0].scrollIntoView({block: 'center'});", buttons[0]
+            )
             buttons[0].click()
             return True
 
         def scroll(self) -> None:
-            self._driver.execute_script(
-                "window.scrollBy(0, window.innerHeight);"
-            )
+            self._driver.execute_script(f"window.scrollBy(0, {self.SCROLL_PX});")
 
         def close(self) -> None:
             self._driver.quit()

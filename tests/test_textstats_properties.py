@@ -79,13 +79,13 @@ def test_dedup_primitives_are_total_on_short_text(spark, texts):
         # every shingle has exactly 3 words
         for s in r.sh:
             assert len(s.split(" ")) == 3
-    sigs = dd.minhash_signatures(df, "doc_id", "text", num_hashes=8, shingle_size=3)
-    per_doc = {
-        r.id: r.n for r in sigs.groupBy("id").agg(F.count("*").alias("n")).collect()
-    }
-    # docs with ≥1 shingle contribute exactly num_hashes rows; shorter docs none
-    n_shingled = sum(1 for r in sh if r.sh)
-    assert sum(per_doc.values()) == 8 * n_shingled
+    sums = dd.minhash_signature_vector(
+        df, "doc_id", "text", num_hashes=8, shingle_size=3
+    ).collect()
+    # docs with ≥1 shingle contribute exactly one wide row with all
+    # num_hashes minhashes non-null; shorter docs none
+    assert sorted(r.id for r in sums) == sorted(r.doc_id for r in sh if r.sh)
+    assert all(r[f"_m{i}"] is not None for r in sums for i in range(8))
     fps = dd.simhash_fingerprints(df, "doc_id", "text").collect()
     assert len(fps) <= len(texts)
 

@@ -83,13 +83,17 @@ def run_isolated(keys: list[str], sf_dir: str, n_runs: int) -> dict:
     flag = ["--min3"] if n_runs > 1 else []
     for i, key in enumerate(keys):
         child_out = f"/tmp/perf_sweep_iso_{key}.json"
+        # A leftover file from an earlier sweep must never pass for this
+        # run's numbers: remove it first and trust only a clean exit.
+        if os.path.exists(child_out):
+            os.remove(child_out)
         cmd = [sys.executable, os.path.abspath(__file__), *flag, sf_dir, child_out, key]
         env = dict(os.environ, PYTHONPATH=REPO)
         proc = subprocess.run(cmd, env=env, capture_output=True, text=True)
-        try:
+        if proc.returncode == 0 and os.path.exists(child_out):
             with open(child_out) as f:
                 results.update(json.load(f))
-        except Exception:  # noqa: BLE001
+        else:
             results[key] = {"error": f"isolated child rc={proc.returncode}: "
                             + proc.stderr.strip()[-240:]}
         r = results.get(key, {})
