@@ -171,6 +171,8 @@ def main() -> int:
                 # (multi-split scans); -1.0 = restage unavailable.
                 "restaged_total": restaged_total,
                 "queries_restaged": restaged,
+                # Task slots the bench session actually ran with.
+                "cpus": spark.sparkContext.defaultParallelism,
             }
         )
     )

@@ -1,23 +1,32 @@
-"""Approximate-nearest-neighbor search over embedding columns.
+"""Nearest-neighbor search and pairwise cosine over embedding columns.
 
-Three tiers (SURVEY.md §2 B.8, §4.2):
-  * brute_force_topk — exact cosine top-k via crossJoin + per-query window.
-    Correctness baseline; viable when |queries| × |corpus| is small or one
-    side broadcasts.
-  * lsh_bucketed_topk — random-hyperplane (sign) LSH: vectors hash to
-    sign-pattern buckets per table; candidates come from equi-joins on
-    (table, bucket), so the scale cost is Σ bucket-collisions, not the cross
-    product. Multiple tables trade recall for cost. Hyperplanes are seeded
-    NumPy — deterministic, broadcast as literal arrays into the plan.
-  * (IVF variant — centroid assignment + probe-N — follows the same
-    bucket-join shape with k-means centroids; LSH is the default because it
-    needs no training pass.)
+Tiers (SURVEY.md §2 B.8, §4.2):
+  * brute_force_topk — exact cosine top-k: corpus rows hash into blocks,
+    query rows replicate to every block, and a NumPy kernel scores each
+    block and cuts its local top-k before the final per-query window.
+    brute_force_topk_expr is the expression-form spec it is pinned to.
+  * lsh_bucketed_topk / lsh_cosine_pairs — random-hyperplane (sign) LSH:
+    vectors hash to sign-pattern buckets per table; candidates come from
+    equi-joins on (table, bucket), so the scale cost is Σ
+    bucket-collisions, not the cross product. Multiple tables trade recall
+    for cost. Hyperplanes are seeded NumPy, regenerated inside the Arrow
+    bucketizer task.
+  * ivf_topk — centroid assignment + probe-N over the same bucket-join
+    shape (deterministic first-n-by-id centroids, no training pass).
+  * blocked_cosine_pairs — exact all-pairs cosine above a threshold,
+    scored one block pair per task.
+
+The three NumPy kernels share one core (list decoder, per-dimension fold,
+side split, block counts from the cluster's parallelism); the blocking is
+the partition-the-corpus / replicate-the-queries scheme of "Time Series
+Similarity Search for Streaming Data in Distributed Systems" (EDBT 2019).
 """
 
 from __future__ import annotations
 
 import os
 import weakref
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -33,15 +42,15 @@ def with_vector_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 
 # session (weak) → {tag: [(input-files signature, JVM canonicalized plan,
-# persisted frame)]}. Round-8 advice: filter_modal_dim /
-# _planes_frame_lazy used to persist() a NEW DataFrame on every
-# invocation and never unpersist — a long driver session accumulated
-# CacheManager entries (bounded only by Spark's canonical-plan dedupe)
-# and, worse, every bench query re-ran the corpus-wide modal aggregate at
-# action time (+21% on q_similarity_topk, round-8 bench). Memoizing per
-# (session, input plan, input-file identity) returns the SAME persisted
-# frame, so the aggregate materializes once per session and the cache
-# population is bounded by distinct input plans.
+# persisted frame)]}. Round-8 advice: filter_modal_dim used to persist()
+# a NEW DataFrame on every invocation and never unpersist — a long
+# driver session accumulated CacheManager entries (bounded only by
+# Spark's canonical-plan dedupe) and, worse, every bench query re-ran the
+# corpus-wide modal aggregate at action time (+21% on q_similarity_topk,
+# round-8 bench). Memoizing per (session, input plan, input-file
+# identity) returns the SAME persisted frame, so the aggregate
+# materializes once per session and the cache population is bounded by
+# distinct input plans.
 #
 # Three identity lessons burned in (round-9 reviews):
 # * Plan identity is the JVM canonicalized plan compared via .equals —
@@ -91,23 +100,20 @@ def _input_files_signature(files_df: DataFrame) -> tuple | None:
     return tuple(sig)
 
 
-def _memoized_persist(
-    df: DataFrame, key_df: DataFrame, files_df: DataFrame, tag: str
-) -> DataFrame:
+def _memoized_persist(df: DataFrame, files_df: DataFrame, tag: str) -> DataFrame:
     """Return a persisted copy of ``df``, reused across invocations whose
-    ``key_df`` has a semantically-equal analyzed plan over identical
-    input files and same ``tag``. ``key_df`` must be a PURE-RELATIONAL
-    identity proxy for ``df`` (no Python UDF nodes — re-pickled closures
-    would never compare equal; the ANALYZED plan is compared because
-    cache substitution only rewrites optimized plans); ``files_df`` is
-    the raw input frame the file signature is read from (see
-    _input_files_signature); ``tag`` must carry every non-plan parameter
-    that shapes ``df``."""
+    ``df`` has a semantically-equal analyzed plan over identical input
+    files and same ``tag``. ``df`` must be PURE-RELATIONAL (no Python UDF
+    nodes — re-pickled closures would never compare equal; the ANALYZED
+    plan is compared because cache substitution only rewrites optimized
+    plans); ``files_df`` is the raw input frame the file signature is
+    read from (see _input_files_signature); ``tag`` must carry every
+    non-plan parameter that shapes ``df``."""
     try:
         sig = _input_files_signature(files_df)
         if sig is None:
             return df.persist()
-        canon = key_df._jdf.queryExecution().analyzed().canonicalized()
+        canon = df._jdf.queryExecution().analyzed().canonicalized()
         per_session = _FRAME_MEMO.setdefault(df.sparkSession, {})
         bucket = per_session.setdefault(tag, [])
         new_files = {uri: (m, s) for uri, m, s in sig}
@@ -181,9 +187,7 @@ def filter_modal_dim(em: DataFrame, vec_col: str = "embedding") -> DataFrame:
         .limit(1)
         .select("__d")
     )
-    dim = _memoized_persist(
-        dim_frame, dim_frame, em, tag=f"modal_dim:{vec_col}"
-    )
+    dim = _memoized_persist(dim_frame, em, tag=f"modal_dim:{vec_col}")
     return em.join(
         F.broadcast(dim), F.size(vec_col) == F.col("__d")
     ).drop("__d")
@@ -292,6 +296,97 @@ def brute_force_topk_expr(
     return _rank_topk(scored, k, extra_cols=[match_on] if match_on else None)
 
 
+# ---------------------------------------------------------------------------
+# Vector-kernel core: the one list decoder, per-dimension fold, side split
+# and block counts the three NumPy kernels below are built on
+# ---------------------------------------------------------------------------
+
+
+class _Lists(NamedTuple):
+    """A decoded Arrow list<float|double> column (see _decode_lists)."""
+
+    valid: np.ndarray  # row is not NULL
+    lens: np.ndarray  # row length; -1 for a NULL row
+    off: np.ndarray  # n + 1 absolute offsets into vals
+    vals: np.ndarray  # the raw child array as float64 (NULL element → NaN)
+    row_has_null: np.ndarray  # row holds at least one NULL element
+
+    def matrix(self, rows, d: int) -> np.ndarray:
+        """(len(rows), d) float64 matrix of ``rows`` (indices or a mask),
+        each of which has length ``d``."""
+        return self.vals[self.off[:-1][rows][:, None] + np.arange(d)[None, :]]
+
+
+def _decode_lists(col) -> _Lists:
+    """Decode an Arrow list column, applying no row policy: each kernel
+    decides at its call site what NULL rows, NULL elements and off-length
+    rows mean. Gathers from the RAW child array with absolute offsets —
+    flatten() drops NULL rows' slots and would misalign."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    valid = ~np.asarray(col.is_null())
+    off = np.asarray(col.offsets)
+    lens = np.where(valid, off[1:] - off[:-1], -1)
+    child = col.values
+    vals = child.to_numpy(zero_copy_only=False).astype(np.float64)
+    if child.null_count:
+        cum = np.concatenate(
+            [[0], np.cumsum(np.asarray(child.is_null(), dtype=np.int64))]
+        )
+        row_has_null = (cum[off[1:]] - cum[off[:-1]]) > 0
+    else:
+        row_has_null = np.zeros(len(col), dtype=bool)
+    return _Lists(valid, lens, off, vals, row_has_null)
+
+
+def _fold(A: np.ndarray, B: np.ndarray):
+    """(A·Bᵀ, row norms of A, row norms of B), accumulated dimension by
+    dimension, left to right, in float64 — the IEEE order of the
+    vectors.dot / l2_norm folds, so every double is bit-identical to the
+    expression path."""
+    d = A.shape[1]
+    acc = np.zeros((len(A), len(B)))
+    na = np.zeros(len(A))
+    nb = np.zeros(len(B))
+    for kk in range(d):
+        na = na + A[:, kk] * A[:, kk]
+        nb = nb + B[:, kk] * B[:, kk]
+        acc = acc + A[:, kk : kk + 1] * B[:, kk]
+    return acc, np.sqrt(na), np.sqrt(nb)
+
+
+def _split_sides(tbl):
+    """A side-tagged group's (``_pside`` 0, ``_pside`` 1) halves, or None
+    when either half is empty. Both sides ride ONE grouped union with a
+    side tag: a cogroup of two frames derived from the same corpus trips
+    Spark's ambiguous-self-join check, and q_similarity_topk's queries
+    are derived from its corpus."""
+    import pyarrow.compute as pc
+
+    side = tbl.column("_pside")
+    halves = tbl.filter(pc.equal(side, 0)), tbl.filter(pc.equal(side, 1))
+    return None if min(h.num_rows for h in halves) == 0 else halves
+
+
+def _parallelism(spark) -> int:
+    """The cluster's task slots (a py4j read — runs no job, so query
+    construction stays lazy). brute_force_topk uses one corpus block per
+    slot; every kernel's output is invariant to its block count."""
+    return max(int(spark.sparkContext.defaultParallelism), 1)
+
+
+def _pair_blocks(parallelism: int) -> int:
+    """blocked_cosine_pairs' block count: the smallest b whose b(b+1)/2
+    block-pair groups cover ``parallelism`` (32 slots → 8 blocks, 36
+    groups)."""
+    b = 1
+    while b * (b + 1) // 2 < parallelism:
+        b += 1
+    return b
+
+
 def _topk_block_scorer(k: int, has_meta: bool):
     """applyInArrow kernel for brute_force_topk: one block's query rows
     (side 0, replicated to every block) × corpus rows (side 1), emitting
@@ -300,9 +395,8 @@ def _topk_block_scorer(k: int, has_meta: bool):
 
     Bit-identity + NULL/NaN parity with brute_force_topk_expr (the
     retained spec; gated by tests/test_similarity_blocked.py):
-    * dot and both norms accumulate per dimension, left to right, in
-      float64 — the same IEEE order as vectors.dot / l2_norm folds, so
-      every emitted double is bit-identical to the expression path;
+    * dot and both norms come from _fold, so every emitted double is
+      bit-identical to the expression path;
     * cosine is NULL exactly where the expression path yields NULL: a
       NULL vector, a NULL vector ELEMENT on either side (zip_with/
       aggregate NULL-propagation), a length-mismatched pair (zip_with
@@ -312,96 +406,56 @@ def _topk_block_scorer(k: int, has_meta: bool):
     * pairs are DROPPED (not NULL) exactly where the join predicate
       drops them: equal ids (self-match), a NULL id on either side, and
       under ``has_meta`` a NULL or unequal metadata value — all SQL
-      comparisons against NULL are non-matches;
+      comparisons against NULL are non-matches. Metadata compares in its
+      own dtype (an int64 column never routes through float64);
     * the local top-k cut orders by the FINAL window's total order —
-      stable_round(cosine, 4) DESC with NaN first (Spark sorts NaN above
-      every double) and NULL last, then neighbor id ASC — so the union
-      of per-block cuts provably contains the global top-k rows
-      (first-k-of-a-sorted-multiset is preserved under any partition of
-      the multiset). Emitting per query ROW (not per id) preserves
-      duplicated-id multiplicity, which the pk fuzz variant requires.
+      stable_round(cosine, 4) DESC, where a NaN cosine rounds to 0.0
+      (Spark's floor is a BIGINT), NULL last, then neighbor id ASC — so
+      for any block count the union of per-block cuts provably contains
+      the global top-k rows (first-k-of-a-sorted-multiset is preserved
+      under any partition of the multiset). Emitting per query ROW (not
+      per id) preserves duplicated-id multiplicity, which the pk fuzz
+      variant requires.
     """
 
-    def _prep(side_tbl):
-        import numpy as np
-        import pyarrow as pa
-
-        ids = side_tbl.column("_pid")
-        if isinstance(ids, pa.ChunkedArray):
-            ids = ids.combine_chunks()
-        col = side_tbl.column("_pvec")
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
-        n = len(ids)
-        valid = ~np.asarray(col.is_null())
-        off = np.asarray(col.offsets)
-        lens = np.full(n, -1, dtype=np.int64)
-        lens[valid] = (off[1:] - off[:-1])[valid]
-        child = col.values
-        vals = child.to_numpy(zero_copy_only=False).astype(np.float64)
-        if child.null_count:
-            cum = np.concatenate(
-                [[0], np.cumsum(np.asarray(child.is_null(), dtype=np.int64))]
-            )
-            row_has_null = (cum[off[1:]] - cum[off[:-1]]) > 0
-        else:
-            row_has_null = np.zeros(n, dtype=bool)
-        ids_np = ids.to_numpy(zero_copy_only=False)
-        meta = None
-        meta_valid = None
-        if has_meta:
-            meta = side_tbl.column("_pmeta")
-            if isinstance(meta, pa.ChunkedArray):
-                meta = meta.combine_chunks()
-            meta_valid = ~np.asarray(meta.is_null())
-        return {
+    def side(t):
+        ids = t.column("_pid").combine_chunks()
+        s = {
             "arrow_ids": ids,
-            "ids": ids_np,
-            "valid": valid,
-            "off": off,
-            "lens": lens,
-            "vals": vals,
-            "row_has_null": row_has_null,
-            "meta": meta,
-            "meta_np": (
-                meta.to_numpy(zero_copy_only=False) if has_meta else None
-            ),
-            "meta_valid": meta_valid,
-            "n": n,
+            "ids": ids.to_numpy(zero_copy_only=False),
+            "vec": _decode_lists(t.column("_pvec")),
         }
+        if has_meta:
+            meta = t.column("_pmeta").combine_chunks()
+            s["meta"] = meta
+            s["meta_valid"] = ~np.asarray(meta.is_null())
+            # Fill NULL slots with a valid value BEFORE converting (the
+            # mask above still drops them): converting a NULL-bearing
+            # int64 column yields float64, where 2^53 and 2^53 + 1 are
+            # equal. An all-NULL side is never compared.
+            if 0 < meta.null_count < len(meta):
+                meta = meta.fill_null(meta.drop_null()[0])
+            s["meta_np"] = meta.to_numpy(zero_copy_only=False)
+        return s
 
     def _score_slice(q, c, lo, hi):
         """Full (mq × slice) cosine/null/drop matrices for corpus rows
         [lo, hi) — real cosines computed per matching vector length."""
-        import numpy as np
-
-        mq = q["n"]
+        qv, cv = q["vec"], c["vec"]
+        mq = len(q["ids"])
         mc = hi - lo
         cos = np.zeros((mq, mc))
         isnull = np.ones((mq, mc), dtype=bool)
-        c_lens = c["lens"][lo:hi]
-        c_valid = c["valid"][lo:hi]
-        c_clean = c_valid & ~c["row_has_null"][lo:hi]
-        q_clean = q["valid"] & ~q["row_has_null"]
-        for length in np.unique(q["lens"][q_clean]):
-            qi = np.nonzero(q_clean & (q["lens"] == length))[0]
+        q_clean = qv.valid & ~qv.row_has_null
+        c_clean = (cv.valid & ~cv.row_has_null)[lo:hi]
+        c_lens = cv.lens[lo:hi]
+        for length in np.unique(qv.lens[q_clean]):
+            qi = np.nonzero(q_clean & (qv.lens == length))[0]
             ci = np.nonzero(c_clean & (c_lens == length))[0]
             if len(qi) == 0 or len(ci) == 0:
                 continue
             d = int(length)
-            qg = q["off"][:-1][qi][:, None] + np.arange(d)[None, :]
-            cg = (c["off"][:-1][lo:hi][ci])[:, None] + np.arange(d)[None, :]
-            Q = q["vals"][qg] if d else np.zeros((len(qi), 0))
-            C = c["vals"][cg] if d else np.zeros((len(ci), 0))
-            na = np.zeros(len(qi))
-            nb = np.zeros(len(ci))
-            acc = np.zeros((len(qi), len(ci)))
-            for kk in range(d):
-                na = na + Q[:, kk] * Q[:, kk]
-                nb = nb + C[:, kk] * C[:, kk]
-                acc = acc + Q[:, kk : kk + 1] * C[:, kk]
-            na = np.sqrt(na)
-            nb = np.sqrt(nb)
+            acc, na, nb = _fold(qv.matrix(qi, d), cv.matrix(ci + lo, d))
             with np.errstate(divide="ignore", invalid="ignore"):
                 block = acc / (na[:, None] * nb[None, :])
             zero = (na[:, None] == 0) | (nb[None, :] == 0)
@@ -419,100 +473,65 @@ def _topk_block_scorer(k: int, has_meta: bool):
                 eq = qm == cm
                 # Spark SQL equality treats NaN = NaN as TRUE (unlike
                 # IEEE ==) — mirror it for floating metadata.
-                if (
-                    np.issubdtype(np.asarray(q["meta_np"]).dtype, np.floating)
-                    and np.issubdtype(
-                        np.asarray(c["meta_np"]).dtype, np.floating
-                    )
+                if np.issubdtype(qm.dtype, np.floating) and np.issubdtype(
+                    cm.dtype, np.floating
                 ):
                     eq |= np.isnan(qm) & np.isnan(cm)
             drop |= ~(mv & eq)
         return cos, isnull, drop
 
-    def _order(cos_vals, null_flags, neighbor_ids):
-        """Indices sorted by the final total order: rounded desc (NaN
-        first, NULL last), neighbor id asc."""
-        import numpy as np
+    def _first_k(qs, cos_vals, null_flags, neighbor_ids):
+        """Positions of each query row's first k candidates under the
+        final window's total order: stable_round(cosine, 4) desc, NULL
+        last, neighbor id asc. Spark's floor returns a BIGINT, so the
+        rounded value saturates and a NaN cosine rounds to 0.0."""
+        x = np.floor(cos_vals * 10000.0 + 0.5)
+        x = np.clip(np.nan_to_num(x, nan=0.0), -(2.0**63), 2.0**63)
+        negr = np.where(null_flags, 0.0, -x / 10000.0)
+        order = np.lexsort((neighbor_ids, negr, null_flags, qs))
+        run = qs[order]
+        rank = np.arange(len(run)) - np.searchsorted(run, run)
+        return order[rank < k]
 
-        rounded = np.floor(cos_vals * 10000.0 + 0.5) / 10000.0
-        nanc = np.where(np.isnan(rounded) & ~null_flags, 0, 1)
-        negr = np.where(
-            np.isnan(rounded) | null_flags, 0.0, -rounded
-        )
-        return np.lexsort(
-            (neighbor_ids, negr, nanc, null_flags.astype(np.int8))
-        )
-
-    def score(tbl):
-        import numpy as np
+    def empty(tbl):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         id_type = tbl.schema.field("_pid").type
-        meta_fields = [("_meta", tbl.schema.field("_pmeta").type)] if has_meta else []
-        empty = pa.table(
-            {
-                "query_id": pa.array([], id_type),
-                "neighbor_id": pa.array([], id_type),
-                "cosine": pa.array([], pa.float64()),
-                **{
-                    name: pa.array([], typ) for name, typ in meta_fields
-                },
-            }
-        )
-        side = tbl.column("_pside")
-        left = tbl.filter(pc.equal(side, 0))
-        right = tbl.filter(pc.equal(side, 1))
-        if left.num_rows == 0 or right.num_rows == 0:
-            return empty
-        q = _prep(left)
-        c = _prep(right)
+        fields = [
+            ("query_id", id_type),
+            ("neighbor_id", id_type),
+            ("cosine", pa.float64()),
+        ]
+        if has_meta:
+            fields.append(("_meta", tbl.schema.field("_pmeta").type))
+        return pa.schema(fields).empty_table()
+
+    def score(tbl):
+        import pyarrow as pa
+
+        halves = _split_sides(tbl)
+        if halves is None:
+            return empty(tbl)
+        q, c = side(halves[0]), side(halves[1])
+        nc = len(c["ids"])
         chunk = 8192  # bounds the score matrix at mq × chunk doubles
-        # per-query candidate accumulators across corpus slices
-        cand_idx: list = [[] for _ in range(q["n"])]
-        cand_cos: list = [[] for _ in range(q["n"])]
-        cand_null: list = [[] for _ in range(q["n"])]
-        for lo in range(0, c["n"], chunk):
-            hi = min(lo + chunk, c["n"])
-            cos, isnull, drop = _score_slice(q, c, lo, hi)
-            keep = ~drop
-            for qi in range(q["n"]):
-                idxs = np.nonzero(keep[qi])[0]
-                if len(idxs) == 0:
-                    continue
-                order = _order(
-                    cos[qi, idxs], isnull[qi, idxs], c["ids"][lo:hi][idxs]
-                )
-                pick = idxs[order[:k]]
-                cand_idx[qi].append(pick + lo)
-                cand_cos[qi].append(cos[qi, pick])
-                cand_null[qi].append(isnull[qi, pick])
-        out_q: list = []
-        out_c: list = []
-        out_cos: list = []
-        out_null: list = []
-        for qi in range(q["n"]):
-            if not cand_idx[qi]:
-                continue
-            gidx = np.concatenate(cand_idx[qi])
-            gcos = np.concatenate(cand_cos[qi])
-            gnull = np.concatenate(cand_null[qi])
-            order = _order(gcos, gnull, c["ids"][gidx])[:k]
-            out_q.append(np.full(len(order), qi, dtype=np.int64))
-            out_c.append(gidx[order])
-            out_cos.append(gcos[order])
-            out_null.append(gnull[order])
-        if not out_q:
-            return empty
-        qs = np.concatenate(out_q)
-        cs = np.concatenate(out_c)
+        # each slice's local top-k (query row, corpus row, cosine, null)
+        parts = []
+        for lo in range(0, nc, chunk):
+            cos, isnull, drop = _score_slice(q, c, lo, min(lo + chunk, nc))
+            qi, ci = np.nonzero(~drop)
+            cv, nv = cos[qi, ci], isnull[qi, ci]
+            pick = _first_k(qi, cv, nv, c["ids"][ci + lo])
+            parts.append((qi[pick], ci[pick] + lo, cv[pick], nv[pick]))
+        qs, cs, cv, nv = (np.concatenate(x) for x in zip(*parts))
+        pick = _first_k(qs, cv, nv, c["ids"][cs])
+        if len(pick) == 0:
+            return empty(tbl)
+        qs, cs, cv, nv = qs[pick], cs[pick], cv[pick], nv[pick]
         cols = {
             "query_id": q["arrow_ids"].take(pa.array(qs)),
             "neighbor_id": c["arrow_ids"].take(pa.array(cs)),
-            "cosine": pa.array(
-                np.concatenate(out_cos), pa.float64(),
-                mask=np.concatenate(out_null),
-            ),
+            "cosine": pa.array(cv, pa.float64(), mask=nv),
         }
         if has_meta:
             cols["_meta"] = c["meta"].take(pa.array(cs))
@@ -528,7 +547,6 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     match_on: str | None = None,
-    blocks: int = 8,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, cosine, rank) — the
     blocked Arrow kernel form (round 12, guide §4.2/§2.3/§8).
@@ -538,38 +556,37 @@ def brute_force_topk(
     .py): same pairs, bit-identical cosine doubles, same ranking. The
     execution shape changes: instead of scoring |Q|×|C| pairs with
     interpreted zip_with/aggregate lambdas and shuffling every scored
-    pair into the rank window, corpus rows hash into ``blocks``
-    deterministic blocks (pmod(xxhash64(id), blocks) — guide §2.5),
-    query rows replicate to every block, and a NumPy kernel scores each
-    block's sub-matrix and emits only each query's LOCAL top-k candidate
-    rows — ≤ |Q|·k·blocks skinny rows reach the final window instead of
-    |Q|×|C| (§2.3 aggregate before you shuffle / §8 decide with small
-    rows). The local cut uses the window's exact total order, so the
-    global top-k is preserved row-for-row.
+    pair into the rank window, corpus rows hash into one deterministic
+    block per cluster task slot (pmod(xxhash64(id), blocks) — guide
+    §2.5; _parallelism), query rows replicate to every block, and a
+    NumPy kernel scores each block's sub-matrix and emits only each
+    query's LOCAL top-k candidate rows — ≤ |Q|·k·blocks skinny rows reach
+    the final window instead of |Q|×|C| (§2.3 aggregate before you
+    shuffle / §8 decide with small rows). The local cut uses the window's
+    exact total order, so the global top-k is preserved row-for-row
+    whatever the block count.
 
     NULL-id rows on either side never pair (the join predicate's NULL
     semantics) and are pre-filtered; everything else — NULL vectors,
     ragged lengths, NULL elements, zero norms, NULL metadata under
     ``match_on`` — reproduces the expression path inside the kernel
-    (docstring of _topk_block_scorer).
-
-    ``blocks`` scales the per-task sub-matrix (|Q| × |C|/blocks doubles,
-    chunked at 8192 corpus rows); raise it with corpus size."""
-    meta_q = [F.col(match_on).alias("_pmeta")] if match_on else []
+    (docstring of _topk_block_scorer). Per task the sub-matrix is
+    |Q| × |C|/blocks doubles, chunked at 8192 corpus rows."""
+    blocks = _parallelism(corpus.sparkSession)
+    meta = [F.col(match_on).alias("_pmeta")] if match_on else []
     q_side = queries.where(F.col(id_col).isNotNull()).select(
         F.lit(0).alias("_pside"),
         F.explode(F.sequence(F.lit(0), F.lit(blocks - 1))).alias("_blk"),
         F.col(id_col).alias("_pid"),
         F.col(vec_col).alias("_pvec"),
-        *meta_q,
+        *meta,
     )
-    meta_c = [F.col(match_on).alias("_pmeta")] if match_on else []
     c_side = corpus.where(F.col(id_col).isNotNull()).select(
         F.lit(1).alias("_pside"),
         F.pmod(F.xxhash64(id_col), F.lit(blocks)).cast("int").alias("_blk"),
         F.col(id_col).alias("_pid"),
         F.col(vec_col).alias("_pvec"),
-        *meta_c,
+        *meta,
     )
     u = q_side.unionByName(c_side)
     id_type = u.schema["_pid"].dataType.simpleString()
@@ -588,76 +605,6 @@ def brute_force_topk(
 def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int = 42) -> np.ndarray:
     rng = np.random.RandomState(seed)
     return rng.randn(n_tables, n_planes, dim)
-
-
-def _planes_frame(spark, planes: np.ndarray) -> DataFrame:
-    """The hyperplane tensor as a TINY broadcastable DataFrame (one row per
-    table: table_id, array<array<double>> planes).
-
-    Shipping planes as data instead of literal expressions matters on the
-    driver: 32 tables × 6 planes × 64 dims as per-element F.lit Columns
-    cost ~40 s of py4j construction, and even a single-parse nested-array
-    literal leaves a 12k-node tree the analyzer re-walks on every
-    subsequent DataFrame op (~13 s) — round-7 profile. As rows, the
-    expression tree is O(1) and the executor-side work is identical."""
-    tensor = [[[float(x) for x in plane] for plane in table] for table in planes]
-    return spark.createDataFrame(
-        [(tensor,)], "_tensor array<array<array<double>>>"
-    )
-
-
-def _planes_frame_lazy(
-    corpus: DataFrame, vec_col: str, n_planes: int, n_tables: int, seed: int
-) -> DataFrame:
-    """The hyperplane tensor derived from the CORPUS, lazily: the dimension
-    comes from a limit-1 scan of the first non-NULL vector AT ACTION TIME,
-    and the seeded tensor is generated executor-side in a mapInPandas over
-    that single row — query construction triggers no Spark job (round-7
-    verdict: the dim probe was the registry's last construction-time job).
-
-    Empty corpus (or all-NULL vectors): the dim frame has zero rows, so the
-    planes frame is empty and the downstream crossJoin yields the empty
-    candidate set with the normal schema — an empty slice is data, not a
-    misconfiguration. isNotNull(): if the first scanned row's vector were
-    NULL, size() is NULL (ANSI) and the generator would crash."""
-    dim_df = (
-        corpus.where(F.col(vec_col).isNotNull())
-        .select(F.size(vec_col).alias("__dim"))
-        .limit(1)
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"_tensor": []})
-                continue
-            d = max(int(pdf["__dim"].iloc[0]), 1)
-            planes = _hyperplanes(d, n_planes, n_tables, seed)
-            tensor = [
-                [[float(x) for x in plane] for plane in table]
-                for table in planes
-            ]
-            yield pd.DataFrame({"_tensor": [tensor]})
-
-    # memoized persist(): the planes frame is crossJoined by BOTH bucketize
-    # sides; uncached, each side would re-evaluate the limit-1 dim scan
-    # independently, and on a ragged corpus two evaluations could in
-    # principle sample different lengths (different hyperplanes per side →
-    # broken buckets). The 1-row cache materializes once per SESSION per
-    # (corpus plan, LSH params); still no construction-time job (persist
-    # is lazy). NOTE the ~n_tables*n_planes*d tensor is what's cached —
-    # memoization also bounds the round-8-advice accumulation. The memo
-    # key plan is dim_df (pure relational) — the mapInPandas node itself
-    # re-pickles its closure per call and would never compare equal; the
-    # tag pins the generator params instead.
-    return _memoized_persist(
-        dim_df.mapInPandas(gen, schema="_tensor array<array<array<double>>>"),
-        dim_df,
-        corpus,
-        tag=f"planes:{vec_col}:{n_planes}:{n_tables}:{seed}",
-    )
 
 
 def _tables_expr(vec_col: str, n_planes: int) -> Column:
@@ -862,8 +809,8 @@ def _lsh_bucketizer(
 ):
     """mapInArrow kernel: append (table_id, bucket) to every input row,
     replicated once per table — NumPy replacement for _tables_expr with
-    identical bucket values (same seeded tensor, same per-dimension
-    left-to-right accumulation, so every dot's sign matches the JVM fold).
+    identical bucket values (same seeded tensor, and _fold's
+    per-dimension accumulation, so every dot's sign matches the JVM fold).
 
     Row classes, mirroring the expression form exactly:
     * conforming rows (length == planes dim, no NULL elements): bucket =
@@ -877,7 +824,6 @@ def _lsh_bucketizer(
     first; mixed lengths raise loudly rather than bucket silently)."""
 
     def run(batches):
-        import numpy as np
         import pyarrow as pa
 
         planes_cache: dict[int, np.ndarray] = {}
@@ -895,15 +841,11 @@ def _lsh_bucketizer(
             n = batch.num_rows
             if n == 0:
                 continue
-            col = batch.column(vec_name)
-            lens = np.full(n, -1, dtype=np.int64)
-            valid = ~np.asarray(col.is_null())
-            off = np.asarray(col.offsets)
-            lens[valid] = (off[1:] - off[:-1])[valid]
+            v = _decode_lists(batch.column(vec_name))
             if dim is not None:
                 d = dim
             else:
-                cand = np.unique(lens[valid])
+                cand = np.unique(v.lens[v.valid])
                 if len(cand) > 1:
                     raise RuntimeError(
                         "_lsh_bucketizer: mixed vector lengths "
@@ -911,38 +853,17 @@ def _lsh_bucketizer(
                         "the corpus (filter_modal_dim / size filter) first"
                     )
                 d = int(cand[0]) if len(cand) else 0
-            # gather from the RAW child array with absolute offsets —
-            # flatten() drops null entries' slots and would misalign
-            child = col.values
-            vals = child.to_numpy(zero_copy_only=False)
-            elem_null = (
-                np.asarray(child.is_null())
-                if child.null_count
-                else np.zeros(len(vals), dtype=bool)
-            )
+            # Row policy: only conforming rows get sign bits; every other
+            # row keeps bucket 0 in every table.
             buckets = np.zeros((n, n_tables), dtype=np.int64)
-            conform = valid & (lens == d)
-            if d > 0 and conform.any():
-                # gather conforming rows' values as an (m, d) matrix
-                starts = off[:-1][conform]
-                gather = starts[:, None] + np.arange(d)[None, :]
-                V = vals[gather].astype(np.float64)
-                has_null = (
-                    elem_null[gather].any(axis=1)
-                    if elem_null.any()
-                    else np.zeros(V.shape[0], dtype=bool)
-                )
-                W = planes_for(d)
-                acc = np.zeros((V.shape[0], n_tables * n_planes))
-                for k in range(d):
-                    acc = acc + V[:, k : k + 1] * W[:, k]
+            conform = v.valid & (v.lens == d) & ~v.row_has_null
+            if conform.any():
+                acc, _, _ = _fold(v.matrix(conform, d), planes_for(d))
                 bits = ~(acc <= 0)
-                bits &= ~has_null[:, None]
-                b = (
+                buckets[conform] = (
                     bits.reshape(-1, n_tables, n_planes).astype(np.int64)
                     << np.arange(n_planes, dtype=np.int64)[None, None, :]
                 ).sum(axis=2)
-                buckets[conform] = b
             idx = np.repeat(np.arange(n), n_tables)
             base = batch.drop_columns([vec_name]).take(pa.array(idx))
             yield pa.record_batch(
@@ -1073,82 +994,50 @@ def _lsh_scored_pairs(
 #   sequence — so the surviving edge set is the one both engines emit.
 
 
-def _arrow_block_matrix(tbl, id_name: str, vec_name: str):
-    """(int64 ids, float64 matrix) from an Arrow cogroup table whose
-    ``vec_name`` column is a list<float|double> of uniform length."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    ids = tbl.column(id_name).to_numpy(zero_copy_only=False).astype(np.int64)
-    col = tbl.column(vec_name)
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-    lens = np.asarray(lens, dtype="float64")
-    if len(lens) and (np.isnan(lens).any() or (lens != lens[0]).any()):
-        raise RuntimeError(
-            "blocked_cosine_pairs: ragged or NULL vectors reached the "
-            "scorer — gate the corpus with filter_modal_dim first"
-        )
-    d = int(lens[0]) if len(lens) else 0
-    vals = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    return ids, vals.reshape(len(ids), d)
-
-
 def _blocked_pair_scorer(threshold: float):
     """Score one (block_i, block_j) pair: every cross pair's cosine via
-    per-dimension accumulation (bit-identical to the JVM fold), keep
-    id_a < id_b above the stable-rounded threshold."""
+    _fold (bit-identical to the JVM fold), keep id_a < id_b above the
+    stable-rounded threshold."""
+
+    def matrix(t):
+        # Row policy: ragged or NULL vectors raise (callers gate the
+        # corpus to its modal dimension); NULL elements decode as NaN.
+        v = _decode_lists(t.column("_pvec"))
+        if not v.valid.all() or (v.lens != v.lens[0]).any():
+            raise RuntimeError(
+                "blocked_cosine_pairs: ragged or NULL vectors reached the "
+                "scorer — gate the corpus with filter_modal_dim first"
+            )
+        ids = t.column("_pid").to_numpy(zero_copy_only=False).astype(np.int64)
+        return ids, v.matrix(np.arange(len(ids)), int(v.lens[0]))
 
     def score(tbl):
-        import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        empty = pa.table(
-            {
-                "id_a": pa.array([], pa.int64()),
-                "id_b": pa.array([], pa.int64()),
-                "cosine": pa.array([], pa.float64()),
-            }
-        )
-        side = tbl.column("_pside")
-        left = tbl.filter(pc.equal(side, 0))
-        right = tbl.filter(pc.equal(side, 1))
-        if left.num_rows == 0 or right.num_rows == 0:
-            return empty
+        halves = _split_sides(tbl)
+        if halves is None:
+            ids = [("id_a", pa.int64()), ("id_b", pa.int64())]
+            return pa.schema(ids + [("cosine", pa.float64())]).empty_table()
         # Diagonal groups hold the same block on both sides: the id_a <
         # id_b mask enumerates each unordered pair once. Off-diagonal
         # groups hold DISJOINT blocks (ids can never repeat across blocks
         # — the block is a function of the id), so every cross pair is
         # kept and emitted with its ids ordered.
         diagonal = tbl.column("_bi")[0].as_py() == tbl.column("_bj")[0].as_py()
-        ia, A = _arrow_block_matrix(left, "_pid", "_pvec")
-        ib, B = _arrow_block_matrix(right, "_pid", "_pvec")
+        ia, A = matrix(halves[0])
+        ib, B = matrix(halves[1])
         if A.shape[1] != B.shape[1]:
             raise RuntimeError(
                 "blocked_cosine_pairs: dimension mismatch across blocks — "
                 f"{A.shape[1]} vs {B.shape[1]}; gate with filter_modal_dim"
             )
-        d = A.shape[1]
-        nb = np.zeros(len(B))
-        for k in range(d):
-            nb = nb + B[:, k] * B[:, k]
-        nb = np.sqrt(nb)
         out_a: list = []
         out_b: list = []
         out_c: list = []
         chunk = 2048  # bounds the cosine matrix at chunk × |B| doubles
         for s in range(0, len(A), chunk):
-            Ac, iac = A[s : s + chunk], ia[s : s + chunk]
-            na = np.zeros(len(Ac))
-            for k in range(d):
-                na = na + Ac[:, k] * Ac[:, k]
-            na = np.sqrt(na)
-            acc = np.zeros((len(Ac), len(B)))
-            for k in range(d):
-                acc = acc + Ac[:, k : k + 1] * B[:, k]
+            iac = ia[s : s + chunk]
+            acc, na, nb = _fold(A[s : s + chunk], B)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = acc / (na[:, None] * nb[None, :])
                 rounded = np.floor(cos * 10000.0 + 0.5) / 10000.0
@@ -1156,13 +1045,8 @@ def _blocked_pair_scorer(threshold: float):
             if diagonal:
                 keep &= iac[:, None] < ib[None, :]
             r, c = np.nonzero(keep)
-            pa_ids, pb_ids = iac[r], ib[c]
-            if not diagonal:
-                lo = np.minimum(pa_ids, pb_ids)
-                hi = np.maximum(pa_ids, pb_ids)
-                pa_ids, pb_ids = lo, hi
-            out_a.append(pa_ids)
-            out_b.append(pb_ids)
+            out_a.append(np.minimum(iac[r], ib[c]))
+            out_b.append(np.maximum(iac[r], ib[c]))
             out_c.append(cos[r, c])
         return pa.table(
             {
@@ -1180,30 +1064,28 @@ def blocked_cosine_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    blocks: int = 8,
 ) -> DataFrame:
     """All unordered pairs (id_a < id_b, both norms > 0) whose
     stable_round(cosine, 4) >= threshold, over a modal-dim-gated corpus —
-    the EXACT ground-truth primitive, blocked: vectors hash into ``blocks``
-    deterministic blocks (pmod(xxhash64(id), blocks) — guide §2.5's
+    the EXACT ground-truth primitive, blocked: vectors hash into b
+    deterministic blocks (pmod(xxhash64(id), b) — guide §2.5's
     deterministic synthetic key), each unordered block pair cogroups into
-    one task, and NumPy scores the whole sub-matrix. Shuffle volume is
-    O(N·blocks) vector rows; compute is the same N²/2 cosines the
-    semantics demand, vectorized. Emitted ``cosine`` is the RAW double —
-    bit-identical to the zip_with/aggregate fold — so callers apply
-    stable_round exactly as before.
+    one task, and NumPy scores the whole sub-matrix. b is _pair_blocks of
+    the cluster's parallelism, so the b(b+1)/2 block-pair tasks cover
+    every slot. Shuffle volume is O(N·b) vector rows; compute is the
+    same N²/2 cosines the semantics demand, vectorized. Emitted
+    ``cosine`` is the RAW double — bit-identical to the zip_with/aggregate
+    fold — so callers apply stable_round exactly as before.
 
     NULL ids never pair (the JVM path's id_a < id_b drops them); rows are
-    filtered here so block assignment is total. ``blocks`` scales the
-    per-task matrix (N/blocks)² — raise it with corpus size; the bench
-    harness corpora fit the default."""
+    filtered here so block assignment is total."""
+    blocks = _pair_blocks(_parallelism(corpus.sparkSession))
     em = corpus.where(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("_pid"), F.col(vec_col).alias("_pvec")
     )
     block = F.pmod(F.xxhash64("_pid"), F.lit(blocks)).cast("int")
-    # Both replica streams ride ONE grouped frame with a side tag (a
-    # cogroup of two frames derived from the same corpus trips the
-    # ambiguous-self-join check); the scorer splits the group by side.
+    # Both replica streams ride ONE grouped frame with a side tag; the
+    # scorer splits the group by side (_split_sides).
     side_a = em.select(
         F.lit(0).alias("_pside"),
         block.alias("_bi"),

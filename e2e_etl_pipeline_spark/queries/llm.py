@@ -852,10 +852,10 @@ def q_dedup_embedding_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions whose recall legitimately collapses). Zero-norm vectors are
     excluded from pairs on both sides (nrm > 0 guards the division).
     ``n_corpus`` is derived in-plan via a broadcast scalar aggregate
-    (round-6 advice: the eager count() is gone); the LSH dim probe is
-    also in-plan since round 8 (similarity._planes_frame_lazy), so
-    constructing this query triggers zero Spark jobs
-    (tests/test_construction_lazy.py).
+    (round-6 advice: the eager count() is gone); the LSH hyperplanes are
+    generated inside the bucketizer task from each batch's vector length
+    (similarity._lsh_bucketizer), so constructing this query triggers
+    zero Spark jobs (tests/test_construction_lazy.py).
 
     Scale: the exact all-pairs side is the verification harness, not the
     operator — it is quadratic BY DESIGN and runs on the bounded bench

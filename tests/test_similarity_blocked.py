@@ -65,14 +65,25 @@ def test_blocked_cosine_pairs_bit_identical_to_hof(em, threshold):
 
 
 def test_blocked_cosine_pairs_more_blocks_than_rows(spark):
-    few = spark.range(3).select(
+    # Two rows: on a session with 4+ task slots (3+ blocks) most block
+    # pairs are empty on one side.
+    few = spark.range(2).select(
         F.col("id").alias("vec_id"),
         F.array(
             (F.col("id") + 1).cast("float"), F.lit(1.0).cast("float")
         ).alias("embedding"),
     )
-    rows = sim.blocked_cosine_pairs(few, threshold=0.0, blocks=16).collect()
-    assert {(r.id_a, r.id_b) for r in rows} == {(0, 1), (0, 2), (1, 2)}
+    rows = sim.blocked_cosine_pairs(few, threshold=0.0).collect()
+    assert {(r.id_a, r.id_b) for r in rows} == {(0, 1)}
+
+
+def test_block_counts_follow_parallelism(spark):
+    p = spark.sparkContext.defaultParallelism
+    assert sim._parallelism(spark) == p
+    for n in (1, 2, 3, 4, 6, 7, 8, 32, 33, p):
+        b = sim._pair_blocks(n)
+        assert (b - 1) * b // 2 < n <= b * (b + 1) // 2
+    assert sim._pair_blocks(32) == 8  # 36 block-pair groups
 
 
 def test_blocked_cosine_pairs_excludes_zero_norm_and_null_id(spark):
@@ -94,7 +105,11 @@ def test_arrow_bucketizer_matches_tables_expr(em, spark):
     expression form (the SQL-literal oracles embed the same algebra)."""
     n_planes, n_tables, seed = 5, 12, 42
     base = em.groupBy("vec_id").agg(F.min("embedding").alias("embedding"))
-    planes_df = sim._planes_frame_lazy(base, "embedding", n_planes, n_tables, seed)
+    dim = base.select(F.size("embedding")).first()[0]
+    planes = sim._hyperplanes(dim, n_planes, n_tables, seed)
+    planes_df = spark.createDataFrame(
+        [(planes.tolist(),)], "_tensor array<array<array<double>>>"
+    )
     ref_rows = (
         base.crossJoin(F.broadcast(planes_df))
         .select(
@@ -211,11 +226,38 @@ def test_brute_force_topk_edge_parity(edge_corpus, k, match_on):
 
 
 def test_brute_force_topk_more_blocks_than_rows(edge_corpus):
+    # Normal, zero-norm and NaN corpus rows: on a session with 4+ task
+    # slots (one block each) most blocks hold no corpus row.
+    small = edge_corpus.where(F.col("vec_id").isin(1, 3, 7))
     q = edge_corpus.where(F.col("vec_id") < 6)
-    ref = _topk_key(sim.brute_force_topk_expr(edge_corpus, q, k=3).collect())
-    got = _topk_key(
-        sim.brute_force_topk(edge_corpus, q, k=3, blocks=64).collect()
+    ref = _topk_key(sim.brute_force_topk_expr(small, q, k=3).collect())
+    got = _topk_key(sim.brute_force_topk(small, q, k=3).collect())
+    assert ref == got
+
+
+def test_brute_force_topk_int64_labels_above_2_53(spark):
+    """int64 metadata must compare in its own dtype: with a NULL label on
+    the query side, a float64 route makes 2^53 and 2^53 + 1 equal."""
+    big = 2**53
+    rows = [
+        (1, [1.0, 0.0], big),
+        (2, [1.0, 1.0], big + 1),
+        (3, [0.0, 1.0], big),
+        (4, [1.0, 2.0], big + 1),
+        (5, [2.0, 1.0], None),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label bigint"
     )
+    ref = _topk_key(
+        sim.brute_force_topk_expr(df, df, k=3, match_on="label").collect(),
+        with_label=True,
+    )
+    got = _topk_key(
+        sim.brute_force_topk(df, df, k=3, match_on="label").collect(),
+        with_label=True,
+    )
+    assert {(r[0], r[1]) for r in ref} == {(1, 3), (3, 1), (2, 4), (4, 2)}
     assert ref == got
 
 
