@@ -27,7 +27,6 @@ from html.parser import HTMLParser
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from e2e_etl_pipeline_spark.functions.salary import parse_salary
@@ -232,50 +231,62 @@ def parse_offers(raw_docs: DataFrame) -> DataFrame:
     """(doc_id, site, html) → typed offer rows (OFFER_SCHEMA + provenance).
 
     DOM walk in mapInPandas; everything downstream (cleaning + salary parse)
-    is codegen'd column expressions.
+    is codegen'd column expressions. The salary struct is selected ONCE and
+    its fields taken in one selectExpr, so Catalyst analyses the large
+    parse_salary expression once, not once per field.
     """
-    extracted = extract_offers(raw_docs)
-    parsed = parse_salary("salary_raw")
-    return extracted.select(
-        "doc_id",
-        "site",
-        "offer_idx",
-        clean_position("position_raw").alias("position"),
-        clean_text("company_raw").alias("company_name"),
-        # SURVEY.md §1.2: staging types money as decimal(12,2) (the parser's
-        # general-purpose number extraction stays double; the cast is the
-        # staging-schema contract). try_cast, not cast: under Spark 4's
-        # ANSI default a parsed digit-run >= 1e10 (e.g. a phone number
-        # matched by parse_salary's number regex) would otherwise throw
-        # NUMERIC_VALUE_OUT_OF_RANGE and kill the whole job; an
-        # out-of-range "salary" degrades to NULL instead.
-        parsed["minimum"].try_cast(T.DecimalType(12, 2)).alias("minimum"),
-        parsed["maximum"].try_cast(T.DecimalType(12, 2)).alias("maximum"),
-        parsed["currency"].alias("currency"),
-        parsed["pay_period"].alias("pay_period"),
+    return (
+        extract_offers(raw_docs)
+        .select(
+            "doc_id",
+            "site",
+            "offer_idx",
+            clean_position("position_raw").alias("position"),
+            clean_text("company_raw").alias("company_name"),
+            parse_salary("salary_raw").alias("_salary"),
+        )
+        .selectExpr(
+            "doc_id",
+            "site",
+            "offer_idx",
+            "position",
+            "company_name",
+            # SURVEY.md §1.2: staging types money as decimal(12,2) (the
+            # parser's general-purpose number extraction stays double; the
+            # cast is the staging-schema contract). try_cast, not cast:
+            # under Spark 4's ANSI default a parsed digit-run >= 1e10 (e.g.
+            # a phone number matched by parse_salary's number regex) would
+            # otherwise throw NUMERIC_VALUE_OUT_OF_RANGE and kill the whole
+            # job; an out-of-range "salary" degrades to NULL instead.
+            "try_cast(_salary.minimum AS DECIMAL(12,2)) AS minimum",
+            "try_cast(_salary.maximum AS DECIMAL(12,2)) AS maximum",
+            "_salary.currency AS currency",
+            "_salary.pay_period AS pay_period",
+        )
     )
 
 
-def _minimal_decimal_str(c) -> "F.Column":
-    # DECIMAL(12,2) renders "8000.00"; the reference writes the regex-parsed
-    # minimal form "8000" / "31.25" (transform_data.py:148-151 emits strings
-    # with no added decimals). Strip a trailing zero-run and any then-bare
-    # point: "8000.00"→"8000", "31.25"→"31.25", "8000.10"→"8000.1".
-    return F.regexp_replace(
-        F.regexp_replace(c.cast("string"), r"(\.\d*?)0+$", "$1"), r"\.$", ""
-    )
+# DECIMAL(12,2) renders "8000.00"; the reference writes the regex-parsed
+# minimal form "8000" / "31.25" (transform_data.py:148-151 emits strings
+# with no added decimals). Strip a trailing zero-run and any then-bare
+# point: "8000.00"→"8000", "31.25"→"31.25", "8000.10"→"8000.1". NULL
+# materializes as "" (SURVEY.md §1.2).
+_MINIMAL_DECIMAL_SQL = (
+    r"coalesce(regexp_replace(regexp_replace(CAST({c} AS STRING), "
+    r"'(\\.\\d*?)0+$', '$1'), '\\.$', ''), '') AS {c}"
+)
 
 
 def offers_to_staging_csv(offers: DataFrame, path: str, mode: str = "overwrite") -> None:
     """CSV sink with header (A6), reference-compatible: NULLs materialize as
     empty strings, numerics as minimal dot-decimal strings (SURVEY.md §1.2)."""
-    out = offers.select(
+    out = offers.selectExpr(
         "position",
         "company_name",
-        F.coalesce(_minimal_decimal_str(F.col("minimum")), F.lit("")).alias("minimum"),
-        F.coalesce(_minimal_decimal_str(F.col("maximum")), F.lit("")).alias("maximum"),
-        F.coalesce("currency", F.lit("")).alias("currency"),
-        F.coalesce("pay_period", F.lit("")).alias("pay_period"),
+        _MINIMAL_DECIMAL_SQL.format(c="minimum"),
+        _MINIMAL_DECIMAL_SQL.format(c="maximum"),
+        "coalesce(currency, '') AS currency",
+        "coalesce(pay_period, '') AS pay_period",
     )
     # emptyValue="": Spark's CSV writer otherwise quotes empty strings as
     # "" while the reference's pandas to_csv writes truly empty fields —

@@ -26,6 +26,7 @@ ACQUIRE_SCHEMA = (
     "doc_id long, site string, region string, experience string, "
     "ingest_date date, html string"
 )
+ACQUIRE_COLUMNS = ("doc_id", "site", "region", "experience", "ingest_date", "html")
 
 
 def synthetic_fetcher(site: str, region: str, experience: str) -> list[tuple[int, str]]:
@@ -60,7 +61,6 @@ def fetched_documents(
     — never wall-clock (SURVEY.md §1.3 determinism note)."""
     from e2e_etl_pipeline_spark.catalog import inline_frame
 
-    cols = ["doc_id", "site", "region", "experience", "ingest_date", "html"]
     rows = []
     for site, region, experience in targets:
         for doc_id, html in fetcher(site, region, experience):
@@ -93,5 +93,5 @@ def fetched_documents(
         # no targets / every fetch empty: a typed empty frame with the
         # declared contract schema, not an inline_frame crash
         return spark.createDataFrame([], ACQUIRE_SCHEMA)
-    df = inline_frame(spark, rows, cols)
+    df = inline_frame(spark, rows, list(ACQUIRE_COLUMNS))
     return df.withColumn("doc_id", df["doc_id"].cast("long"))
